@@ -196,12 +196,19 @@ def publish_cached(
 
 
 def user_scratch_dir(kind: str) -> str:
-    """Pid-scoped FIXED scratch path under a per-user 0700 root, with
-    a dead-pid sweep of sibling entries so crashed runs don't orphan
-    their scratch forever (the streaming module's sweep contract).
-    Fixed, not mkdtemp-fresh: repeated invocations in one process —
-    bench min-of-3, sweep re-runs — overwrite instead of accrete.
-    Returns the path; the caller creates/overwrites it."""
+    """Pid-scoped FIXED scratch path under a per-user 0700 root — the
+    ONLY per-call scratch policy in the package: every query artifact
+    and stream replay lives here, nowhere else under the temp dir
+    (tests/test_scratch_lifecycle.py guards the package for stray
+    ``mkdtemp``/``gettempdir`` calls).
+
+    Fixed, not mkdtemp-fresh: repeated invocations in one process
+    overwrite instead of accrete, so disk holds at most one copy per
+    (kind, live pid).  The dead-pid sweep of sibling entries reclaims
+    what crashed or killed processes left behind.  Callers whose
+    returned frame reads the scratch lazily keep it until the next call
+    of the same kind; callers that finish eagerly delete it before
+    returning.  Returns the path; the caller creates/overwrites it."""
     import shutil
 
     root = user_tmp_root("mfs_scratch")

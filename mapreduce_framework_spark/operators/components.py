@@ -112,7 +112,8 @@ def connected_components(
     # partitioning (loop_parts on v) is exactly what every round's join
     # requires — re-partitioning the cached frame is a cheap shuffle of
     # cached rows, and raw is released as soon as sym is live.  Confs
-    # are restored in the finally.
+    # are restored and both caches released in the finally, on the
+    # failure path too.
     spark = edges.sparkSession
     raw = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -129,11 +130,11 @@ def connected_components(
     )
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sym = raw.repartition(loop_parts, F.col("v")).persist()
 
     try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
         labels = iter_checkpoint(
             sym.select("u").distinct().select("u", F.col("u").alias("component")),
             reliable,
@@ -167,6 +168,7 @@ def connected_components(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        raw.unpersist()
         sym.unpersist()
 
     return labels.select(F.col("u").alias("node"), "component")

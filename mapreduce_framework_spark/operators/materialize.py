@@ -27,14 +27,14 @@ Results are identical on every path — the gate only picks WHERE the
 frame's bytes live (nowhere / executor disk / reliable FS), pinned by
 tests/test_operators.py::test_sized_checkpoint_paths_identical.
 
-Thresholds are deliberately conf-shaped, not constants tuned to the
-bench host: ``$SPARK_GRAFT_CKPT_MIN_BYTES`` (default 64 MiB — below
-that, a second scan of page-cached parquet is single-digit ms while a
-checkpoint job costs a barrier + write + re-read) and
-``$SPARK_GRAFT_CKPT_MAX_BYTES`` (default 64 GiB — the point where a
-single executor-local copy of the frame stops being an acceptable
+Thresholds: ``MIN_BYTES`` = 64 MiB (below that, a second scan of
+page-cached parquet is single-digit ms while a checkpoint job costs a
+barrier + write + re-read) and ``MAX_BYTES`` = 64 GiB (the point where
+a single executor-local copy of the frame stops being an acceptable
 availability/disk bet on a shared cluster; size to the smallest
-per-executor scratch volume you run with).
+per-executor scratch volume you run with).  Callers and tests may pass
+``min_bytes``/``max_bytes`` per call; the only environment knob is the
+deployment path ``$SPARK_GRAFT_CKPT_RELIABLE_DIR``.
 """
 
 from __future__ import annotations
@@ -43,16 +43,20 @@ import os
 
 from pyspark.sql import DataFrame
 
-_MIN_DEFAULT = 64 << 20  # 64 MiB
-_MAX_DEFAULT = 64 << 30  # 64 GiB
+MIN_BYTES = 64 << 20  # 64 MiB
+MAX_BYTES = 64 << 30  # 64 GiB
 
 
 def plan_size_estimate(df: DataFrame) -> int:
     """Catalyst's ``sizeInBytes`` estimate of the optimized logical
     plan — driver-side arithmetic over file sizes and operator
     heuristics, no Spark job.  An ESTIMATE: joins/explodes propagate
-    multiplicatively and can overshoot, which for this gate fails safe
-    (an overshot estimate turns materialization ON at worst)."""
+    multiplicatively and can overshoot.  For this gate an overshoot is
+    not uniformly safe: across ``MIN_BYTES`` it turns materialization
+    ON (one extra job at worst), but across ``MAX_BYTES`` it turns it
+    OFF — the frame stays lazy (or takes the reliable checkpoint when
+    one is configured), so a frame that would have fit on executor disk
+    is recomputed by every consumer."""
     stats = df._jdf.queryExecution().optimizedPlan().stats()
     size = stats.sizeInBytes()
     # py4j maps scala.math.BigInt to a Python int already; older
@@ -67,19 +71,11 @@ def sized_local_checkpoint(
     max_bytes: int | None = None,
 ) -> DataFrame:
     """Eagerly materialize ``df`` iff its estimated size lands in
-    [min_bytes, max_bytes] — see module docstring for the rationale and
-    the env overrides (``SPARK_GRAFT_CKPT_MIN_BYTES`` /
-    ``SPARK_GRAFT_CKPT_MAX_BYTES`` / ``SPARK_GRAFT_CKPT_RELIABLE_DIR``)."""
-    lo = (
-        min_bytes
-        if min_bytes is not None
-        else int(os.environ.get("SPARK_GRAFT_CKPT_MIN_BYTES", _MIN_DEFAULT))
-    )
-    hi = (
-        max_bytes
-        if max_bytes is not None
-        else int(os.environ.get("SPARK_GRAFT_CKPT_MAX_BYTES", _MAX_DEFAULT))
-    )
+    [min_bytes, max_bytes] (default ``MIN_BYTES``/``MAX_BYTES``) — see
+    the module docstring for the rationale and the
+    ``SPARK_GRAFT_CKPT_RELIABLE_DIR`` path."""
+    lo = MIN_BYTES if min_bytes is None else min_bytes
+    hi = MAX_BYTES if max_bytes is None else max_bytes
     est = plan_size_estimate(df)
     if est < lo:
         return df

@@ -324,12 +324,13 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf-sized fixture from broadcasting, which would hide the property
     being demonstrated."""
     import os
-    import tempfile
+
+    from mapreduce_framework_spark.io import user_scratch_dir
 
     tag = os.path.basename(sf_dir.rstrip("/"))
-    # pid-suffixed path: table NAMES are per-session catalogs, but the
-    # data path is shared /tmp — a fixed name races concurrent sessions.
-    base = os.path.join(tempfile.gettempdir(), f"mfs_bucketed_{tag}_{os.getpid()}")
+    # Pid-scoped scratch: table NAMES are per-session catalogs, but a
+    # data path shared across sessions would race them.
+    base = user_scratch_dir("bucketed")
     li_t, ord_t = f"li_bucketed_{tag.replace('.', '_')}", f"ord_bucketed_{tag.replace('.', '_')}"
     for name, src, key in (
         (li_t, table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice"), "l_orderkey"),
@@ -626,10 +627,10 @@ def join_bloom_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle for a bloom to protect), then read back — runtime confs
     are read at action time, so returning a lazy frame and restoring
     the confs would silently re-plan without the bloom."""
-    import tempfile
+    from mapreduce_framework_spark.io import user_scratch_dir
 
     prev = {k: spark.conf.get(k, None) for k in BLOOM_JOIN_CONFS}
-    out = tempfile.mkdtemp(prefix="mfs_bloomjoin_")
+    out = user_scratch_dir("bloomjoin")
     try:
         for k, v in BLOOM_JOIN_CONFS.items():
             spark.conf.set(k, v)

@@ -11,14 +11,13 @@ job runs unchanged AND produces identical answers to the fast path.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_framework_spark import compat
 from mapreduce_framework_spark.functions.tokenize import tokenize_sql_duckdb
-from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.io import table, user_scratch_dir
 from mapreduce_framework_spark.registry import register
 
 _ORACLE = f"""
@@ -39,11 +38,11 @@ def _spill_corpus(spark: SparkSession, sf_dir: str) -> str:
     for OUTPUT paths) also made every bench run re-spill the corpus,
     pricing the key 1.5× its round-5 time.  Inputs are immutable once
     written, so caching the INPUT spill is safe; output dirs stay
-    per-invocation.  Cross-session safe: staged in a private dir, then
-    atomically renamed into place — the loser of a concurrent-create
-    race discards its copy, and readers only ever see a complete
-    directory (rename is atomic; no partially-written corpus exists
-    under the published name)."""
+    per-process (io.user_scratch_dir).  Cross-session safe: staged in
+    a private dir, then atomically renamed into place — the loser of a
+    concurrent-create race discards its copy, and readers only ever
+    see a complete directory (rename is atomic; no partially-written
+    corpus exists under the published name)."""
     st = os.stat(os.path.join(sf_dir, "documents.parquet"))
     # cache_sf_token: path-hash-suffixed basename, so no sf_dir
     # basename can nest inside another SF's GC family (round-10
@@ -74,12 +73,11 @@ def mapreduce_job_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     text corpus (one doc per line — the reference's file-of-lines input
     model), then mapfunc/reducefunc with R=5 (the graded small run's R,
     w6/docs/workshop9.md:17)."""
-    # Per-invocation OUTPUT dirs (mkdtemp), NOT fixed names: two
-    # sessions on one host sharing /tmp/mfs_mr_out_<sf> race each other —
-    # one overwrites the directory while the other's lazy re-read is
-    # mid-scan (observed as FAILED_READ_FILE when a bench run and a
-    # verify sweep overlapped).  The INPUT corpus is cached (_spill_corpus).
-    run_dir = tempfile.mkdtemp(prefix=f"mfs_mr_{os.path.basename(sf_dir)}_")
+    # OUTPUT dir: the pid-scoped scratch path — two sessions on one host
+    # never share it, so neither can overwrite the other's sink while
+    # its lazy re-read is mid-scan; repeated calls in one process
+    # overwrite their own.  The INPUT corpus is cached (_spill_corpus).
+    run_dir = user_scratch_dir("mr")
     corpus = _spill_corpus(spark, sf_dir)
     out = os.path.join(run_dir, "out")
     result = compat.run_job(
@@ -137,9 +135,9 @@ def mapreduce_job_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     reducer.  The oracle recomputes the composition declaratively from
     the source corpus, so the hash proves the two chained opaque-UDF
     jobs equal one two-level aggregation — chaining loses nothing."""
-    # Per-invocation OUTPUT dirs for the same two-session race reason as
-    # mapreduce_job_wordcount above; shared cached input corpus likewise.
-    run_dir = tempfile.mkdtemp(prefix=f"mfs_mrc_{os.path.basename(sf_dir)}_")
+    # Pid-scoped OUTPUT dir as in mapreduce_job_wordcount above; shared
+    # cached input corpus likewise.
+    run_dir = user_scratch_dir("mrc")
     corpus = _spill_corpus(spark, sf_dir)
     mid = os.path.join(run_dir, "mid")
     compat.run_job(

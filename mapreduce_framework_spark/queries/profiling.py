@@ -12,12 +12,12 @@ R reducers → R output blobs per job, forever).
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.io import table, user_scratch_dir
 from mapreduce_framework_spark.registry import register
 
 # (column, null-count expr source, representation for min/max)
@@ -138,23 +138,29 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics row so the operation itself stays a DataFrame.
     """
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "source", "n_chars")
-    # pid-suffixed against the cross-session overwrite race (see
-    # queries/mapreduce_job.py).
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"mfs_compact_{os.path.basename(sf_dir)}_{os.getpid()}",
-    )
+    # The metrics row is computed eagerly, so the scratch is removed
+    # before returning.
+    base = user_scratch_dir("compact")
     small, compacted = os.path.join(base, "small"), os.path.join(base, "compacted")
-    docs.repartition(64).write.mode("overwrite").parquet(small)
-    spark.read.parquet(small).repartition(4).write.mode("overwrite").parquet(compacted)
 
     def _nfiles(d: str) -> int:
         return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
 
-    n_in = spark.read.parquet(small).count()
-    n_out = spark.read.parquet(compacted).count()
+    try:
+        docs.repartition(64).write.mode("overwrite").parquet(small)
+        spark.read.parquet(small).repartition(4).write.mode("overwrite").parquet(
+            compacted
+        )
+        row = (
+            spark.read.parquet(small).count(),
+            spark.read.parquet(compacted).count(),
+            _nfiles(small),
+            _nfiles(compacted),
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
-        [(n_in, n_out, _nfiles(small), _nfiles(compacted))],
+        [row],
         "n_rows_before bigint, n_rows_after bigint, n_files_before int, n_files_after int",
     )
 

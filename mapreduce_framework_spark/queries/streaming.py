@@ -534,35 +534,25 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     no duplication.  This is the engine-grade version of the
     reference's requeue + overwrite-by-name exactly-once machinery
     (workerimpl.cc:319-333)."""
-    import glob
     import os
     import shutil
-    import tempfile
 
+    from mapreduce_framework_spark.io import user_scratch_dir
+    from mapreduce_framework_spark.streaming.runner import stage_replay
     from mapreduce_framework_spark.streaming.sinks import idempotent_parquet_writer
 
     ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    # All THIS PROCESS's runs live under one pid-suffixed root so each
-    # invocation can sweep its own previous run's directories without
-    # deleting a concurrent session's live sink; the current run's dir
-    # must outlive this function (the returned DataFrame lazily reads
-    # sink_dir).
-    tmp_root = os.path.join(tempfile.gettempdir(), f"mfs_eo_sink_{os.getpid()}")
-    if os.path.isdir(tmp_root):
-        shutil.rmtree(tmp_root, ignore_errors=True)
-    os.makedirs(tmp_root, exist_ok=True)
-    base = tempfile.mkdtemp(prefix="run_", dir=tmp_root)
+    # Fixed per-process scratch, cleared per invocation (a reused
+    # checkpoint would make the availableNow pass a no-op); it must
+    # outlive this function — the returned frame lazily reads sink_dir.
+    base = user_scratch_dir("eo_sink")
+    shutil.rmtree(base, ignore_errors=True)
     src_dir, sink_dir, ckpt = (
         os.path.join(base, "src"),
         os.path.join(base, "sink"),
         os.path.join(base, "ckpt"),
     )
-    ev.repartitionByRange(4, "ts", "event_id").sortWithinPartitions(
-        "ts", "event_id"
-    ).write.mode("overwrite").parquet(src_dir)
-    part_files = sorted(glob.glob(os.path.join(src_dir, "part-*")))
-    for i, f in enumerate(part_files):
-        os.utime(f, (1_600_000_000 + i * 60, 1_600_000_000 + i * 60))
+    part_files = stage_replay(ev, src_dir)
 
     write_batch = idempotent_parquet_writer(sink_dir)
     q = (
@@ -639,37 +629,29 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Disk lifecycle (round-5): superseded snapshots are pruned inside
     the merge (state_{b-2} removed once state_b is durable — the retry
     contract only ever replays the LAST uncommitted batch, which needs
-    state_{b-1}), stale roots left by dead driver pids are swept at
-    start, and the source/checkpoint scratch is removed on completion
-    — so a replay of ANY batch count holds at most two snapshots on
-    disk (pinned by tests/test_streaming.py::
+    state_{b-1}), io.user_scratch_dir reclaims what dead driver pids
+    left behind, and the source/checkpoint scratch is removed on
+    completion — so a replay of ANY batch count holds at most two
+    snapshots on disk (pinned by tests/test_streaming.py::
     test_cdc_merge_disk_stays_bounded)."""
-    import glob
     import os
     import shutil
-    import tempfile
+
+    from mapreduce_framework_spark.io import user_scratch_dir
+    from mapreduce_framework_spark.streaming.runner import stage_replay
 
     ev = table(spark, sf_dir, "events").select(
         "ts", "event_id", "user_id", "event_type", "value"
     )
-    _sweep_stale_cdc_roots()
-    tmp_root = os.path.join(tempfile.gettempdir(), f"mfs_cdc_{os.getpid()}")
-    if os.path.isdir(tmp_root):
-        shutil.rmtree(tmp_root, ignore_errors=True)
-    os.makedirs(tmp_root, exist_ok=True)
-    base = tempfile.mkdtemp(prefix="run_", dir=tmp_root)
+    base = user_scratch_dir("cdc")
+    shutil.rmtree(base, ignore_errors=True)
     src_dir, state_root, ckpt = (
         os.path.join(base, "src"),
         os.path.join(base, "state"),
         os.path.join(base, "ckpt"),
     )
     os.makedirs(state_root, exist_ok=True)
-    ev.repartitionByRange(4, "ts", "event_id").sortWithinPartitions(
-        "ts", "event_id"
-    ).write.mode("overwrite").parquet(src_dir)
-    part_files = sorted(glob.glob(os.path.join(src_dir, "part-*")))
-    for i, f in enumerate(part_files):
-        os.utime(f, (1_600_000_000 + i * 60, 1_600_000_000 + i * 60))
+    stage_replay(ev, src_dir)
 
     q = (
         spark.readStream.schema(ev.schema)
@@ -745,29 +727,6 @@ def cdc_merge(state_root: str):
             shutil.rmtree(superseded, ignore_errors=True)
 
     return merge
-
-
-def _sweep_stale_cdc_roots() -> None:
-    """Remove mfs_cdc_<pid> scratch roots whose driver pid is dead —
-    without this, every crashed/killed run leaks its root forever."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    for root in glob.glob(os.path.join(tempfile.gettempdir(), "mfs_cdc_*")):
-        try:
-            pid = int(root.rsplit("_", 1)[1])
-        except ValueError:
-            continue
-        if pid == os.getpid():
-            continue
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            shutil.rmtree(root, ignore_errors=True)
-        except PermissionError:
-            pass  # live pid owned by someone else — leave it
 
 
 @register(
@@ -863,29 +822,10 @@ def stream_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows only emit the PREVIOUS session when they prove the gap
     exceeded).  Open sessions at end-of-stream are deliberately held:
     they are not closed yet, and the oracle applies the same
-    final-watermark cutoff.
-
-    Lane selection: Spark 4's ``transformWithStateInPandas``
-    (streaming/stateful.py timer_sessions — arbitrary named timers,
-    TTL, evolved-state API) is preferred but its Python↔JVM state
-    protocol needs google.protobuf, which THIS container lacks — so
-    the import-gated fallback is ``applyInPandasWithState`` +
-    ``EventTimeTimeout`` (timeout_sessions), one event-time timer per
-    key, which sessionization needs exactly.  Both lanes implement the
-    identical emission contract; tests/test_streaming.py pins their
-    parity whenever protobuf is available (skipped here, same policy
-    as the multimodal real-codec seam)."""
-    from mapreduce_framework_spark.streaming.stateful import (
-        timeout_sessions,
-        timer_sessions,
-    )
-
-    try:  # pragma: no cover - protobuf absent in this container
-        import google.protobuf  # noqa: F401
-
-        transform = timer_sessions
-    except ImportError:
-        transform = timeout_sessions
+    final-watermark cutoff.  The lane is ``applyInPandasWithState`` +
+    ``EventTimeTimeout`` (streaming/stateful.py timeout_sessions): one
+    event-time timer per key, which sessionization needs exactly."""
+    from mapreduce_framework_spark.streaming.stateful import timeout_sessions
 
     ev = table(spark, sf_dir, "events").select("ts", "user_id")
     # Python-stateful lane — tighter autoscale target, same rationale
@@ -893,7 +833,7 @@ def stream_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_file_stream(
         spark,
         ev,
-        transform,
+        timeout_sessions,
         watermark=("ts", "10 seconds"),
         output_mode="append",
         state_rows_per_partition=6_000,

@@ -8,8 +8,10 @@ micro-batch sequence time-ordered, so watermark semantics behave as
 they would on a live, mostly-ordered stream — with the synthetic ~5%
 late arrivals actually exercising late-row dropping.
 
-On a real deployment the same transform attaches to a Kafka/files
-source with a checkpoint dir; nothing in the transforms changes.
+The replay files and checkpoint live in ``io.user_scratch_dir`` and are
+removed before :func:`run_file_stream` returns or raises.  On a real
+deployment the same transform attaches to a Kafka/files source with a
+checkpoint dir; nothing in the transforms changes.
 """
 
 from __future__ import annotations
@@ -17,76 +19,32 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_framework_spark.io import user_scratch_dir
 
-def run_file_stream(
-    spark: SparkSession,
+
+def stage_replay(
     source_df: DataFrame,
-    transform,
+    src_dir: str,
     *,
-    watermark: tuple[str, str] | None = None,
-    output_mode: str = "complete",
     n_batches: int = 4,
     order_col: str = "ts",
-    state_partitions: int | None = None,
-    state_rows_per_partition: int = 25_000,
-    max_files_per_trigger: int | None = 1,
     batch_col: str | None = None,
-    collect_progress: list | None = None,
-) -> DataFrame:
-    """Replay ``source_df`` as ``n_batches`` time-ordered micro-batches
-    through ``transform``; return the memory-sink contents.
+) -> list[str]:
+    """Write ``source_df`` under ``src_dir`` as the replay files of a
+    file-source stream and return them in replay order — the ONE
+    replay stager (run_file_stream and the foreachBatch sink queries
+    in queries/streaming.py all stage through it).
 
-    ``max_files_per_trigger`` sets how many source files each
-    micro-batch consumes (None → no cap: availableNow processes
-    everything in one batch).  Varying it changes BATCHING only; for
-    complete/update-mode state the final result must be invariant —
-    tests/test_streaming.py pins that across 1, 2, and all-at-once.
-
-    ``state_partitions`` bounds the stateful-operator parallelism for
-    the run: every micro-batch commits one state-store delta PER
-    shuffle partition, so over-partitioning a small replay spends most
-    of its time fsyncing near-empty state files (measured ~2× the
-    whole query at 32 partitions on the windowed keys), while
-    UNDER-partitioning starves the operators that do real per-row work
-    (the Python stateful lanes measured 1.25× faster at 16 than at the
-    former fixed 8).  Default ``None`` = AUTOSCALE from the replay's
-    actual row count (parquet footer metadata of the staged files —
-    driver-side, no job): ``clamp(rows / state_rows_per_partition, 2,
-    defaultParallelism)``.  ``state_rows_per_partition`` is the
-    per-operator-class cost knob: the default 25 000 fits JVM windowed
-    aggregates and stream-stream joins (per-row work is ns-scale, so
-    the per-partition state-commit cost dominates early); Python
-    stateful transforms (applyInPandasWithState /
-    transformWithStateInPandas) should pass ~6 000 — their per-key
-    Python cost is ~3 orders larger, so they repay more parallelism
-    (A/B grid in OPTIMIZATION_r13.md).  On a cluster the same rule
-    sizes ``spark.sql.shuffle.partitions`` to the stateful stage's
-    volume instead of the scan width, and the parallelism clamp scales
-    with the executor fleet.  The session value is restored after the
-    run — streams capture the conf at start().
-
-    ``batch_col``: when set, ``source_df`` carries an EXPLICIT integer
-    batch assignment and the runner writes one file per batch value in
-    ascending order (column dropped before write).  Unlike the default
-    ``repartitionByRange`` path — whose sampled range bounds are not
-    reproducible outside Spark — an explicit assignment is a pure SQL
-    expression, so a DuckDB oracle can replay the exact batch sequence
-    (and therefore the exact watermark progression).  This is how
-    `stream_watermark_late` delivers deterministic LATE arrivals: early
-    rows in time order, a fixed late set in the final batch.
-
-    ``collect_progress``: pass a list to receive the query's
-    StreamingQueryProgress objects after termination — the engine-side
-    metrics surface (numRowsDroppedByWatermark, per-batch watermarks)
-    that `stream_watermark_drop_report` hash-checks against SQL.
-    """
-    src_dir = tempfile.mkdtemp(prefix="mfs_stream_src_")
-    ckpt_dir = tempfile.mkdtemp(prefix="mfs_stream_ckpt_")
+    Default: ``n_batches`` files range-partitioned on ``order_col``
+    (every other column breaks ties) and sorted within each file.
+    ``batch_col``: one file per explicit batch value instead (see
+    :func:`run_file_stream`).  Either way the files' mtimes are pinned
+    to replay order, so ``maxFilesPerTrigger=1`` feeds them in a
+    reproducible sequence."""
     if batch_col is not None:
         from pyspark.sql import functions as F
 
@@ -140,77 +98,157 @@ def run_file_stream(
     base = 1_600_000_000
     for i, f in enumerate(part_files):
         os.utime(f, (base + i * 60, base + i * 60))
+    return part_files
 
-    if state_partitions is None:
-        # Scale-adaptive partitioning (round-13; guide §2.2 "fewer,
-        # larger partitions" / round-12 verdict task #1): the staged
-        # files' parquet footers give the exact replay row count for
-        # free (driver-side metadata, no job), and the A/B grid in
-        # OPTIMIZATION_r13.md shows both failure modes a constant
-        # invites — 8 partitions starves the Python stateful lanes on
-        # 32 cores, 32 partitions drowns the windowed/join lanes in
-        # near-empty state-store commits.
-        import pyarrow.parquet as pq
 
-        n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in part_files)
-        state_partitions = max(
-            2,
-            min(
-                spark.sparkContext.defaultParallelism,
-                n_rows // max(state_rows_per_partition, 1) + 1,
-            ),
-        )
+def run_file_stream(
+    spark: SparkSession,
+    source_df: DataFrame,
+    transform,
+    *,
+    watermark: tuple[str, str] | None = None,
+    output_mode: str = "complete",
+    n_batches: int = 4,
+    order_col: str = "ts",
+    state_partitions: int | None = None,
+    state_rows_per_partition: int = 25_000,
+    max_files_per_trigger: int | None = 1,
+    batch_col: str | None = None,
+    collect_progress: list | None = None,
+) -> DataFrame:
+    """Replay ``source_df`` as ``n_batches`` time-ordered micro-batches
+    through ``transform``; return the memory-sink contents.
 
-    reader = spark.readStream.schema(source_df.schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_dir)
-    if watermark is not None:
-        stream = stream.withWatermark(*watermark)
+    ``max_files_per_trigger`` sets how many source files each
+    micro-batch consumes (None → no cap: availableNow processes
+    everything in one batch).  Varying it changes BATCHING only; for
+    complete/update-mode state the final result must be invariant —
+    tests/test_streaming.py pins that across 1, 2, and all-at-once.
 
-    out = transform(stream)
-    sink_name = f"mfs_sink_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    # recentProgress retains only the last numRecentProgressUpdates
-    # entries (default 100) — a deeper replay would silently truncate the
-    # metrics `collect_progress` hands to stream_watermark_drop_report.
-    # Size the buffer to the replay and verify nothing was evicted below.
-    min_batches = (
-        -(-len(part_files) // max_files_per_trigger)
-        if max_files_per_trigger is not None
-        else 1
-    )
-    prev_recent = None
-    if collect_progress is not None:
-        prev_recent = spark.conf.get(
-            "spark.sql.streaming.numRecentProgressUpdates", "100"
-        )
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates",
-            str(max(100, min_batches + 16)),
-        )
+    ``state_partitions`` bounds the stateful-operator parallelism for
+    the run: every micro-batch commits one state-store delta PER
+    shuffle partition, so over-partitioning a small replay spends most
+    of its time fsyncing near-empty state files (measured ~2× the
+    whole query at 32 partitions on the windowed keys), while
+    UNDER-partitioning starves the operators that do real per-row work
+    (the Python stateful lanes measured 1.25× faster at 16 than at the
+    former fixed 8).  Default ``None`` = AUTOSCALE from the replay's
+    actual row count (parquet footer metadata of the staged files —
+    driver-side, no job): ``clamp(rows / state_rows_per_partition, 2,
+    defaultParallelism)``.  ``state_rows_per_partition`` is the
+    per-operator-class cost knob: the default 25 000 fits JVM windowed
+    aggregates and stream-stream joins (per-row work is ns-scale, so
+    the per-partition state-commit cost dominates early); Python
+    stateful transforms (applyInPandasWithState) should pass ~6 000 — their per-key
+    Python cost is ~3 orders larger, so they repay more parallelism
+    (A/B grid in OPTIMIZATION_r13.md).  On a cluster the same rule
+    sizes ``spark.sql.shuffle.partitions`` to the stateful stage's
+    volume instead of the scan width, and the parallelism clamp scales
+    with the executor fleet.  The session value is restored after the
+    run — streams capture the conf at start().
+
+    ``batch_col``: when set, ``source_df`` carries an EXPLICIT integer
+    batch assignment and the runner writes one file per batch value in
+    ascending order (column dropped before write).  Unlike the default
+    ``repartitionByRange`` path — whose sampled range bounds are not
+    reproducible outside Spark — an explicit assignment is a pure SQL
+    expression, so a DuckDB oracle can replay the exact batch sequence
+    (and therefore the exact watermark progression).  This is how
+    `stream_watermark_late` delivers deterministic LATE arrivals: early
+    rows in time order, a fixed late set in the final batch.
+
+    ``collect_progress``: pass a list to receive the query's
+    StreamingQueryProgress objects after termination — the engine-side
+    metrics surface (numRowsDroppedByWatermark, per-batch watermarks)
+    that `stream_watermark_drop_report` hash-checks against SQL.
+    """
+    # Memory sink: nothing the returned frame reads lives on disk, so
+    # the replay files and the checkpoint are removed before this
+    # returns or raises.  Cleared first as well — a reused checkpoint
+    # would turn the availableNow pass into a no-op.
+    root = user_scratch_dir("stream")
+    shutil.rmtree(root, ignore_errors=True)
+    src_dir, ckpt_dir = os.path.join(root, "src"), os.path.join(root, "ckpt")
     try:
-        query = (
-            out.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
+        part_files = stage_replay(
+            source_df,
+            src_dir,
+            n_batches=n_batches,
+            order_col=order_col,
+            batch_col=batch_col,
         )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_recent is not None:
-            spark.conf.set(
-                "spark.sql.streaming.numRecentProgressUpdates", prev_recent
+        if state_partitions is None:
+            # Scale-adaptive partitioning (round-13; guide §2.2 "fewer,
+            # larger partitions" / round-12 verdict task #1): the staged
+            # files' parquet footers give the exact replay row count for
+            # free (driver-side metadata, no job), and the A/B grid in
+            # OPTIMIZATION_r13.md shows both failure modes a constant
+            # invites — 8 partitions starves the Python stateful lanes on
+            # 32 cores, 32 partitions drowns the windowed/join lanes in
+            # near-empty state-store commits.
+            import pyarrow.parquet as pq
+
+            n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in part_files)
+            state_partitions = max(
+                2,
+                min(
+                    spark.sparkContext.defaultParallelism,
+                    n_rows // max(state_rows_per_partition, 1) + 1,
+                ),
             )
-    if collect_progress is not None:
-        got = [p for p in query.recentProgress if p["numInputRows"] > 0]
-        assert len(got) >= min_batches, (
-            f"progress buffer evicted entries: {len(got)} data batches "
-            f"retained < {min_batches} replayed files/trigger groups"
+
+        reader = spark.readStream.schema(source_df.schema)
+        if max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        stream = reader.parquet(src_dir)
+        if watermark is not None:
+            stream = stream.withWatermark(*watermark)
+
+        out = transform(stream)
+        sink_name = f"mfs_sink_{uuid.uuid4().hex[:12]}"
+        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        # recentProgress retains only the last numRecentProgressUpdates
+        # entries (default 100) — a deeper replay would silently truncate the
+        # metrics `collect_progress` hands to stream_watermark_drop_report.
+        # Size the buffer to the replay and verify nothing was evicted below.
+        min_batches = (
+            -(-len(part_files) // max_files_per_trigger)
+            if max_files_per_trigger is not None
+            else 1
         )
-        collect_progress.extend(query.recentProgress)
+        prev_recent = None
+        if collect_progress is not None:
+            prev_recent = spark.conf.get(
+                "spark.sql.streaming.numRecentProgressUpdates", "100"
+            )
+            spark.conf.set(
+                "spark.sql.streaming.numRecentProgressUpdates",
+                str(max(100, min_batches + 16)),
+            )
+        try:
+            query = (
+                out.writeStream.format("memory")
+                .queryName(sink_name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt_dir)
+                .trigger(availableNow=True)
+                .start()
+            )
+            query.awaitTermination()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            if prev_recent is not None:
+                spark.conf.set(
+                    "spark.sql.streaming.numRecentProgressUpdates", prev_recent
+                )
+        if collect_progress is not None:
+            got = [p for p in query.recentProgress if p["numInputRows"] > 0]
+            assert len(got) >= min_batches, (
+                f"progress buffer evicted entries: {len(got)} data batches "
+                f"retained < {min_batches} replayed files/trigger groups"
+            )
+            collect_progress.extend(query.recentProgress)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
     return spark.table(sink_name)

@@ -69,134 +69,28 @@ SESSION_OUTPUT_SCHEMA = (
 )
 
 
-def timer_sessions(stream_df: DataFrame, gap_ms: int = 43_200_000) -> DataFrame:
-    """Event-time-timer sessionization via ``transformWithStateInPandas``
-    (round-8 verdict task #5 — the capability class
-    ``applyInPandasWithState`` cannot express: TIMER-DRIVEN emission,
-    where a row is produced because TIME passed, not because an input
-    row arrived).
+def timeout_sessions(stream_df: DataFrame, gap_ms: int = 43_200_000) -> DataFrame:
+    """Event-time-timer sessionization on ``applyInPandasWithState`` +
+    ``EventTimeTimeout``: TIMER-DRIVEN emission, where a row is
+    produced because TIME passed, not because an input row arrived.
 
     Per-user sessions with an idle gap: an arriving event either
     extends the open session (Δt ≤ gap) or PROVES the old one closed
-    (Δt > gap — emitted immediately, no timer needed); the timer covers
-    the other closure mode, a session nothing follows — each batch
-    re-arms one event-time timer at last_ts + gap, and when the
-    watermark passes it, ``handleExpiredTimer`` emits the session and
-    clears the key's state.  Sessions still open at the final watermark
-    are deliberately NOT emitted (they are not closed yet) — the
-    registered key's oracle applies the same cutoff.
-
-    State posture at 100 TB: one fixed-width value-state row + one
-    timer per ACTIVE user — idle keys clear themselves on expiry, so
-    state tracks concurrent sessions, not history (the advantage over
-    the NoTimeout running_totals pattern above).  Emission timestamps
-    are integer epoch-ms (computed in-plan by unix_millis, mirrored by
-    DuckDB's epoch_ms), so the output is engine- and batching-exact."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class SessionProcessor(StatefulProcessor):
-        # Shipped by value via cloudpickle (executors never import this
-        # module); all imports are local for the same reason.
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState(
-                "sess", "start_ms long, last_ms long, cnt long, timer_ms long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):
-            import numpy as np
-            import pandas as pd
-
-            cur = self._sess.get() if self._sess.exists() else None
-            start, last, cnt, old_timer = cur if cur is not None else (
-                None,
-                None,
-                0,
-                None,
-            )
-            closed = []
-            # numpy sort + .tolist() instead of pd.concat().sort_values():
-            # this function runs once per KEY per batch over ~tens of
-            # rows, so per-call pandas object churn is the hot path
-            # (guide §4.2) — measured on the applyInPandasWithState twin
-            # below, which shares this body.
-            parts = [pdf["ms"].to_numpy() for pdf in rows if len(pdf)]
-            if parts:
-                arr = np.concatenate(parts) if len(parts) > 1 else parts[0]
-                for t in np.sort(arr).tolist():
-                    if start is None:
-                        start, last, cnt = t, t, 1
-                    elif t - last > gap_ms:
-                        closed.append((int(key[0]), start, last, cnt))
-                        start, last, cnt = t, t, 1
-                    else:
-                        # min/max guards: out-of-order arrivals within
-                        # the watermark delay land INSIDE the session
-                        # span (delay ≪ gap is the operating envelope),
-                        # so the span must absorb them on both ends —
-                        # matching the globally-ordered oracle.
-                        start, last, cnt = min(start, t), max(last, t), cnt + 1
-            if start is not None:
-                new_timer = last + gap_ms
-                if old_timer is not None and old_timer != new_timer:
-                    self._handle.deleteTimer(old_timer)
-                if old_timer != new_timer:
-                    self._handle.registerTimer(new_timer)
-                self._sess.update((start, last, cnt, new_timer))
-            if closed:
-                yield pd.DataFrame(
-                    closed, columns=["user_id", "start_ms", "end_ms", "n_events"]
-                )
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            import pandas as pd
-
-            if self._sess.exists():
-                start, last, cnt, timer_ms = self._sess.get()
-                # Only the CURRENT timer closes the session; a stale
-                # expiry racing a same-batch re-arm must not.
-                if timer_ms == expiredTimerInfo.getExpiryTimeInMs():
-                    self._sess.clear()
-                    yield pd.DataFrame(
-                        [(int(key[0]), start, last, cnt)],
-                        columns=["user_id", "start_ms", "end_ms", "n_events"],
-                    )
-
-        def close(self) -> None:
-            pass
-
-    with_ms = stream_df.withColumn("ms", F.unix_millis(F.col("ts")))
-    return with_ms.groupBy("user_id").transformWithStateInPandas(
-        SessionProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="EventTime",
-    )
-
-
-def timeout_sessions(stream_df: DataFrame, gap_ms: int = 43_200_000) -> DataFrame:
-    """The SAME timer-driven sessionization as :func:`timer_sessions`,
-    expressed on ``applyInPandasWithState`` + ``EventTimeTimeout`` —
-    the lane that runs in THIS container (transformWithStateInPandas's
-    state-server protocol needs google.protobuf, absent here; see
-    timer_sessions' docstring and tests/test_streaming.py's
-    protobuf-gated parity pin).  One event-time timeout per key is
-    exactly one timer per key, which is all sessionization needs: each
-    update re-arms ``setTimeoutTimestamp(last_ms + gap_ms)``; when the
-    watermark passes it Spark re-invokes the function with
+    (Δt > gap — emitted immediately, no timer needed).  The timer
+    covers the other closure mode, a session nothing follows: each
+    update re-arms ``setTimeoutTimestamp(last_ms + gap_ms)``, one
+    event-time timeout per key, which is exactly one timer per key;
+    when the watermark passes it Spark re-invokes the function with
     ``state.hasTimedOut`` and no rows, and the session emits + clears.
-    Emission rules are identical to timer_sessions (arriving Δt > gap
-    proves the old session closed → immediate emit; open sessions at
-    the final watermark stay unemitted)."""
+    Sessions still open at the final watermark are deliberately NOT
+    emitted (they are not closed yet) — the registered key's oracle
+    applies the same cutoff.
+
+    State posture at 100 TB: one fixed-width state row per ACTIVE user
+    — idle keys clear themselves on expiry, so state tracks concurrent
+    sessions, not history.  Emission timestamps are integer epoch-ms
+    (computed in-plan by unix_millis, mirrored by DuckDB's epoch_ms),
+    so the output is engine- and batching-exact."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -212,9 +106,9 @@ def timeout_sessions(stream_df: DataFrame, gap_ms: int = 43_200_000) -> DataFram
             return
         start, last, cnt = state.get if state.exists else (None, None, 0)
         closed = []
-        # Same per-key hot-path shape as timer_sessions: numpy sort +
-        # .tolist() beats pd.concat().sort_values() + per-element int()
-        # when the function runs once per key per batch (guide §4.2).
+        # numpy sort + .tolist() beats pd.concat().sort_values() +
+        # per-element int() when the function runs once per key per
+        # batch (guide §4.2).
         parts = [pdf["ms"].to_numpy() for pdf in pdfs if len(pdf)]
         if parts:
             arr = np.concatenate(parts) if len(parts) > 1 else parts[0]
@@ -225,7 +119,11 @@ def timeout_sessions(stream_df: DataFrame, gap_ms: int = 43_200_000) -> DataFram
                     closed.append((int(key[0]), start, last, cnt))
                     start, last, cnt = t, t, 1
                 else:
-                    # same bounded-disorder absorption as timer_sessions
+                    # min/max guards: out-of-order arrivals within the
+                    # watermark delay land INSIDE the session span
+                    # (delay ≪ gap is the operating envelope), so the
+                    # span must absorb them on both ends — matching the
+                    # globally-ordered oracle.
                     start, last, cnt = min(start, t), max(last, t), cnt + 1
         if start is not None:
             state.update((start, last, cnt))

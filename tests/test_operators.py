@@ -3,6 +3,7 @@ partitioning parity, bucketized range join."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -1077,3 +1078,25 @@ def test_fingerprints_dictionary_hash_identical(spark):
             ).collect()
         }
         assert base == dic
+
+
+def test_components_releases_caches_and_confs_on_failure(spark, monkeypatch):
+    """A failing propagation loop must leave the session as it found it:
+    both persisted edge frames released and the two loop confs
+    (shuffle width, AQE off) restored — not only on the success path."""
+    from mapreduce_framework_spark.operators import components
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("planted checkpoint failure")
+
+    monkeypatch.setattr(components, "iter_checkpoint", boom)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "src long, dst long")
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before_confs = {k: spark.conf.get(k) for k in keys}
+    before_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    with pytest.raises(RuntimeError, match="planted checkpoint failure"):
+        components.connected_components(edges, "src", "dst")
+
+    assert {k: spark.conf.get(k) for k in keys} == before_confs
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before_rdds
