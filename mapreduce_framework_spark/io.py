@@ -10,6 +10,7 @@ text splitting, and ranged reads (reference w7/src/worker/worker.h:42-86,
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,53 +55,53 @@ def user_tmp_root(prefix: str) -> str:
 
 
 def user_cache_root() -> str:
-    """Per-user root for the build-once artifact caches (spilled
-    corpora, persisted adjacency/index caches) — deliberately shared
-    ACROSS PROCESSES of one user: keyed by source-file identity,
-    atomic-rename published."""
+    """Per-user root for the build-once artifact caches of
+    :func:`publish_cached` — deliberately shared ACROSS PROCESSES of one
+    user: names are derived from input identity and code version, and
+    every publish is an atomic rename."""
     return user_tmp_root("mfs_cache")
 
 
-def cache_sf_token(sf_dir: str) -> str:
-    """Collision-proof scale-factor component for cache keys and GC
-    families.  A bare ``basename(sf_dir)`` is ambiguous under
-    :func:`reap_superseded`'s prefix matching: family ``kind_sf1``
-    prefix-matches ``kind_sf1_alt_...``, which puts sf1_alt's LIVE
-    cache inside sf1's family where one idle hour gets it reaped
-    (round-10 ADVICE).  Suffixing a short hash of the full normalized
-    path keeps same-SF tokens identical across sessions while making
-    cross-SF prefix nesting impossible in practice (the basenames
-    would have to nest AND the 24-bit-truncated hashes align exactly
-    at the nesting boundary)."""
+def _sf_token(sf_dir: str) -> str:
+    """Scale-factor component of a cache family: the basename (readable)
+    plus a short hash of the full normalized path, so two SF dirs that
+    share a basename never share a family, while every spelling of one
+    path (relative, trailing slash) maps to the same token."""
     import hashlib
 
     p = os.path.normpath(os.path.abspath(sf_dir))
     return f"{os.path.basename(p)}.{hashlib.sha1(p.encode()).hexdigest()[:6]}"
 
 
+@functools.cache
+def _code_version() -> str:
+    """sha1 of every ``.py`` source in this package, computed once per
+    process: the ONE code version of every cached artifact."""
+    import hashlib
+    import pathlib
+
+    pkg = pathlib.Path(__file__).parent
+    h = hashlib.sha1()
+    for f in sorted(pkg.rglob("*.py")):
+        h.update(str(f.relative_to(pkg)).encode())
+        h.update(f.read_bytes())
+    return h.hexdigest()[:8]
+
+
 def reap_superseded(family: str, keep: str, age_s: float = 3600.0) -> list[str]:
-    """Generation GC for the build-once artifact caches (round-9
-    verdict task #6: ``user_cache_root()`` accreted one directory per
-    (sf, file-identity, params) forever).  Removes sibling cache dirs
-    that share ``family`` (the stable prefix: artifact kind + every
-    component that may legitimately coexist, e.g. the SF) but are not
-    ``keep`` — i.e. generations whose file-identity/params/version
-    component changed, which by the cache-key contract means their
-    input or code is gone.  The ``age_s`` guard (default 1 h) keeps a
-    concurrent session on an older code version from having its
-    artifact reaped mid-read: a superseded dir is only removed once it
-    has sat untouched past the guard.  Returns the reaped names (for
-    the unit test); never raises — GC must not fail a query."""
+    """Generation GC for :func:`publish_cached`: removes the cache dirs
+    of ``family`` other than ``keep`` — generations whose input identity
+    or code version changed, so no current caller can ask for them
+    again.  Families match exactly, never by prefix, so artifacts of
+    another kind, SF or parameter set are untouchable.  The ``age_s``
+    guard keeps a concurrent session on an older code version from
+    having its artifact reaped mid-read: a superseded dir goes only
+    once it has sat untouched (no cache hit) past the guard.  Returns
+    the reaped names; never raises — GC must not fail a query."""
     import shutil
     import time
 
     root = user_cache_root()
-    prefix = family if family.endswith("_") else family + "_"
-    if not (keep.startswith(prefix) or keep == family):
-        raise ValueError(
-            f"reap_superseded: keep={keep!r} is not in family {family!r} — "
-            "the sweep would reap the artifact it just published"
-        )
     reaped: list[str] = []
     now = time.time()
     try:
@@ -108,7 +109,9 @@ def reap_superseded(family: str, keep: str, age_s: float = 3600.0) -> list[str]:
     except OSError:
         return reaped
     for name in names:
-        if name == keep or not name.startswith(prefix):
+        # Names are <family>-<generation> and a generation holds no
+        # "-", so the family is everything before the last one.
+        if name == keep or name.rpartition("-")[0] != family:
             continue
         path = os.path.join(root, name)
         try:
@@ -121,77 +124,71 @@ def reap_superseded(family: str, keep: str, age_s: float = 3600.0) -> list[str]:
     return reaped
 
 
-def publish_cached(
-    cache_name: str, build, family: str | None = None, reap_age_s: float = 3600.0
-) -> str:
-    """The ONE stage-then-atomic-rename cache publish (previously
-    copy-pasted between the mapreduce corpus spill and the kv-sink
-    cache — a hardening of the publish race must land once, here).
+def publish_cached(kind: str, sf_dir: str, table: str, build, params: str = "") -> str:
+    """Build-once artifact cache: returns ``user_cache_root()/<name>``,
+    calling ``build(staged_path)`` only when no artifact of that name
+    exists yet.
 
-    ``build(staged_path)`` materializes the artifact at a private
-    staged path; the finished directory is then renamed to
-    ``user_cache_root()/cache_name``.  Cross-session safe: rename is
-    atomic, the loser of a concurrent-create race discards its copy,
-    and readers only ever see a complete directory.  The CALLER owns
-    key hygiene: ``cache_name`` must encode everything the artifact
-    depends on — source-file identity AND a version component for any
-    code the output derives from (a stale artifact under an
-    input-only key survives code changes and fails oracles forever).
+    io owns key hygiene; callers only name the artifact.  The artifact
+    must be a function of ``<sf_dir>/<table>.parquet``, ``params`` and
+    this package's code, nothing else.  The name is
+    ``<kind>_<sf token>[_<params>]-<size>_<mtime_ns>_<code version>``:
 
-    ``family`` opts into generation GC: pass the stable prefix of
-    ``cache_name`` (kind + SF + fixed params — everything EXCEPT the
-    file-identity/version tail; build the SF component with
-    :func:`cache_sf_token`, not a bare basename) and superseded
-    sibling generations are swept via :func:`reap_superseded` after
-    publish.
+    - the part before the last ``-`` is the GC family (kind, SF,
+      params — the axes along which artifacts legitimately coexist);
+    - the generation after it is the input file's ``st_size`` and
+      ``st_mtime_ns`` plus the code version.
 
-    Lazy-read window (documented limit): the mtime touch below marks
-    last USE at cache-lookup time, but a Spark plan built over the
-    returned path executes lazily — an action fired more than
-    ``reap_age_s`` after the lookup, with a newer generation published
-    in between and no intervening lookup, can lose the superseded
-    parquet mid-read to another session's sweep.  The repo's readers
-    re-resolve the cache per query invocation (every *_probe key calls
-    its cache fn before building the plan), which bounds the
-    lookup-to-action gap to one query's planning time — orders of
-    magnitude inside the 1 h guard.
-    """
+    Code-version rule: the version is a hash of every ``.py`` file in
+    the package (:func:`_code_version`), so ANY code change starts a
+    new generation of EVERY cache.  That is coarse on purpose: a
+    per-artifact version has to list what the artifact derives from,
+    and a list that misses a helper serves a stale artifact against a
+    fresh oracle until someone clears the cache by hand.
+
+    Publish: ``build`` writes at a private staged path, then one
+    atomic rename moves the complete directory into place; the loser
+    of a concurrent-create race discards its copy, so readers only
+    ever see complete artifacts.  Every call then sweeps the family's
+    superseded generations (:func:`reap_superseded`, 1 h age guard).
+
+    A hit refreshes the directory mtime, so the age guard measures time
+    since last USE.  Lazy-read window (documented limit): a Spark plan
+    over the returned path executes lazily; an action fired more than
+    the guard after the lookup, with a newer generation published in
+    between, can lose the superseded parquet mid-read.  The repo's
+    readers resolve the cache per query invocation, which bounds the
+    lookup-to-action gap to one query's planning time."""
     import shutil
     import tempfile
 
-    dest = os.path.join(user_cache_root(), cache_name)
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    family = "_".join(p for p in (kind, _sf_token(sf_dir), params) if p)
+    name = f"{family}-{st.st_size}_{st.st_mtime_ns}_{_code_version()}"
+    dest = os.path.join(user_cache_root(), name)
     if os.path.isdir(dest):
-        # Refresh the dir mtime on every cache HIT: reap_superseded's
-        # age guard keys on mtime, and reads alone never update it — a
-        # session steadily USING an older-generation artifact would
-        # otherwise look idle and get reaped mid-read by a newer
-        # session's publish (round-10 review finding).  With the touch,
-        # mtime approximates last use and the guard means what its
-        # docstring says.
         try:
             os.utime(dest)
         except OSError:
             pass
     else:
-        stage = tempfile.mkdtemp(prefix=f"{cache_name}_stage_")
-        staged = os.path.join(stage, "artifact")
-        build(staged)
+        stage = tempfile.mkdtemp(prefix=f"{name}_stage_")
         try:
-            os.rename(staged, dest)
-        except OSError:
-            # Only the lost-race shape is benign (a concurrent session
-            # published first, so dest now exists and is complete).  A
-            # rename that failed for any OTHER reason — EXDEV when
-            # TMPDIR moved across filesystems between calls, EACCES —
-            # must not fall through to "return a path that isn't
-            # there": that surfaces later as a baffling missing-path
-            # error far from the cause (round-9 ADVICE).
-            if not os.path.isdir(dest):
-                shutil.rmtree(stage, ignore_errors=True)
-                raise
-        shutil.rmtree(stage, ignore_errors=True)
-    if family is not None:
-        reap_superseded(family, keep=cache_name, age_s=reap_age_s)
+            staged = os.path.join(stage, "artifact")
+            build(staged)
+            try:
+                os.rename(staged, dest)
+            except OSError:
+                # Only the lost-race shape is benign (a concurrent
+                # session published first, so dest now exists and is
+                # complete).  Any other failure — EXDEV when TMPDIR
+                # moved across filesystems, EACCES — must raise here,
+                # not return a path that is not there.
+                if not os.path.isdir(dest):
+                    raise
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+    reap_superseded(family, keep=name)
     return dest
 
 

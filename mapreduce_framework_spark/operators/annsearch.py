@@ -253,7 +253,7 @@ def quantized_topk(
     )
 
 
-def occupancy_planes(n_vectors: int, target_occupancy: int = 64) -> int:
+def occupancy_planes(n: int, target_occupancy: int = 64) -> int:
     """Plane count for ~``target_occupancy`` vectors per bucket:
     smallest np ≥ 8 with 2^np ≥ n / target — i.e. the per-table bucket
     count GROWS with the corpus so candidate-set size (≈ ball_volume ·
@@ -261,7 +261,7 @@ def occupancy_planes(n_vectors: int, target_occupancy: int = 64) -> int:
     5.8×-at-10× probe finding).  Pure integer arithmetic
     ((n−1).bit_length(), no libm log2) so the DuckDB oracle's
     ``length(bin(n−1))`` reproduces it bit-exactly at any n."""
-    return max(8, (n_vectors - 1).bit_length() - (target_occupancy.bit_length() - 1))
+    return max(8, (n - 1).bit_length() - (target_occupancy.bit_length() - 1))
 
 
 def hyperplane_buckets(
@@ -431,7 +431,6 @@ def lsh_topk(
     hamming_radius: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    n_vectors: int | None = None,
 ) -> DataFrame:
     """Multi-probe hyperplane-LSH top-k: candidates are vectors whose
     bucket is within ``hamming_radius`` bits of the query's bucket in
@@ -449,34 +448,14 @@ def lsh_topk(
     equals the historical 8, so results are unchanged there.  Recall
     accounting for the growing plane count is in SCALE.md §LSH.
 
-    Callers that already know the corpus size (scale probes, serving
-    layers with catalog statistics) should pass ``n_vectors`` so the
-    derivation stays lazy: without the hint, deriving the plane count
-    runs one eager ``vectors.count()`` — a hidden extra job that
-    re-executes the full upstream lineage when ``vectors`` is an
-    unpersisted derived frame (persist the input first in that case).
-    The hint must be the EXACT row count, not an estimate: the plane
-    count derives from it via ``occupancy_planes``, so a stale catalog
-    figure whose ``(n-1).bit_length()`` differs silently changes
-    bucketing — and therefore which top-k survives the candidate cut —
-    versus an oracle that derives planes from the true count.  Set
-    ``MFS_VERIFY_LSH_HINT=1`` to cross-check the hint against a real
-    count (debug-only: it is exactly the eager job the hint avoids)."""
+    Deriving the plane count runs one eager ``vectors.count()`` — a
+    hidden extra job that re-executes the full upstream lineage when
+    ``vectors`` is an unpersisted derived frame (persist the input
+    first in that case).  Callers that already know the EXACT corpus
+    size pass ``n_planes=occupancy_planes(n)`` instead, which buckets
+    identically and keeps the call lazy."""
     if n_planes is None:
-        if n_vectors is not None:
-            import os
-
-            if os.environ.get("MFS_VERIFY_LSH_HINT") == "1":
-                true_planes = occupancy_planes(vectors.count())
-                if occupancy_planes(n_vectors) != true_planes:
-                    raise ValueError(
-                        f"n_vectors hint {n_vectors} derives "
-                        f"{occupancy_planes(n_vectors)} planes but the true "
-                        f"corpus count derives {true_planes} — stale hint"
-                    )
-        n_planes = occupancy_planes(
-            n_vectors if n_vectors is not None else vectors.count()
-        )
+        n_planes = occupancy_planes(vectors.count())
     buckets = hyperplane_buckets(vectors, n_tables, n_planes, id_col, vec_col)
     qb = buckets.where(F.col(id_col) == query_id).select(
         "tbl", F.col("bucket").alias("qbucket")

@@ -242,32 +242,12 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_vocab_cache(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once trained-tokenizer artifact per (SF, documents file
-    identity, training-code version): the final vocab (word → symbol
-    count) and the merge table as parquet.  The version component
-    hashes the generated training oracle (encodes N_MERGES + every
-    semantic detail of the loop) AND the Spark training functions'
-    source — a Spark-side-only bugfix must invalidate the artifact
-    too, or the cache would keep serving the buggy vocab against a
-    fresh oracle forever (round-10 review finding; exactly the
-    anti-pattern publish_cached's docstring forbids).  Published
-    through io.publish_cached with family GC: superseded generations
-    reap after the cross-session age guard."""
-    import hashlib
-    import inspect
+    """Build-once trained-tokenizer artifact per SF: the final vocab
+    (word → symbol count) and the merge table as parquet, published
+    through io.publish_cached."""
     import os
 
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    sf_base = cache_sf_token(sf_dir)
-    code = "".join(
-        inspect.getsource(f) for f in (bpe_train, _pair_counts, _words0)
-    )
-    ver = hashlib.sha1(
-        (_merges_oracle(N_MERGES) + code).encode()
-    ).hexdigest()[:8]
-    ident = f"{sf_base}_m{N_MERGES}_{st.st_size}_{st.st_mtime_ns}_{ver}"
+    from mapreduce_framework_spark.io import publish_cached
 
     def build(staged: str) -> None:
         os.makedirs(staged)
@@ -278,12 +258,7 @@ def _bpe_vocab_cache(spark: SparkSession, sf_dir: str) -> str:
         )
         merges.write.parquet(os.path.join(staged, "merges"))
 
-    # family carries the fixed param (m{N_MERGES}) per publish_cached's
-    # documented contract: two concurrently-used merge budgets for one
-    # SF must not reap each other (round-10 ADVICE).
-    return publish_cached(
-        f"mfs_bpe_{ident}", build, family=f"mfs_bpe_{sf_base}_m{N_MERGES}"
-    )
+    return publish_cached("bpe", sf_dir, "documents", build, f"m{N_MERGES}")
 
 
 @register(

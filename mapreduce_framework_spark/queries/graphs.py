@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.io import publish_cached, table
 from mapreduce_framework_spark.operators.components import iter_checkpoint
 from mapreduce_framework_spark.registry import register
 
@@ -621,18 +621,7 @@ def persisted_cosupply_adjacency(
     bucket directory, and the build amortizes across every downstream
     graph query.
 
-    Cache contract = _spill_corpus's (queries/mapreduce_job.py): keyed
-    by (sf, lineitem file identity, k, n_buckets) — a pure function of
-    immutable inputs — staged privately and atomically renamed into
-    place, so concurrent sessions race safely and readers only ever see
-    a complete artifact."""
-    import os
-
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
-
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-    sf_base = cache_sf_token(sf_dir)
-    ident = f"{sf_base}_k{k}b{n_buckets}_{st.st_size}_{st.st_mtime_ns}"
+    Built once per (SF, k, n_buckets) through io.publish_cached."""
 
     def build(staged: str) -> None:
         l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
@@ -650,17 +639,7 @@ def persisted_cosupply_adjacency(
             .parquet(staged)
         )
 
-    # family = kind + SF + fixed params (k/n_buckets): per-SF artifacts
-    # coexist (tests/bench/driver run different SFs concurrently), and
-    # two concurrently-used parameterizations of one SF must not reap
-    # each other (round-10 ADVICE) — only a changed FILE IDENTITY marks
-    # a generation superseded, and the publish sweep reaps it once it
-    # ages past the cross-session guard.
-    dest = publish_cached(
-        f"mfs_graph_adj_{ident}",
-        build,
-        family=f"mfs_graph_adj_{sf_base}_k{k}b{n_buckets}",
-    )
+    dest = publish_cached("graph_adj", sf_dir, "lineitem", build, f"k{k}b{n_buckets}")
     return spark.read.parquet(dest)
 
 

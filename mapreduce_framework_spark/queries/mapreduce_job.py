@@ -17,54 +17,23 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_spark import compat
 from mapreduce_framework_spark.functions.tokenize import tokenize_sql_duckdb
-from mapreduce_framework_spark.io import table, user_scratch_dir
+from mapreduce_framework_spark.io import publish_cached, table, user_scratch_dir
+from mapreduce_framework_spark.queries.wordcount import _ORACLE
 from mapreduce_framework_spark.registry import register
-
-_ORACLE = f"""
-SELECT word, count(*) AS cnt
-FROM (
-    SELECT unnest({tokenize_sql_duckdb('text')}) AS word
-    FROM documents
-)
-GROUP BY word
-""".strip()
 
 
 def _spill_corpus(spark: SparkSession, sf_dir: str) -> str:
-    """Spill documents.text to a one-doc-per-line text corpus, cached
-    per (sf, source-file identity): the corpus is a pure function of
-    documents.parquet, so repeated invocations share one copy — the
-    round-6 switch to per-invocation dirs (a real two-session race fix
-    for OUTPUT paths) also made every bench run re-spill the corpus,
-    pricing the key 1.5× its round-5 time.  Inputs are immutable once
-    written, so caching the INPUT spill is safe; output dirs stay
-    per-process (io.user_scratch_dir).  Cross-session safe: staged in
-    a private dir, then atomically renamed into place — the loser of a
-    concurrent-create race discards its copy, and readers only ever
-    see a complete directory (rename is atomic; no partially-written
-    corpus exists under the published name)."""
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    # cache_sf_token: path-hash-suffixed basename, so no sf_dir
-    # basename can nest inside another SF's GC family (round-10
-    # ADVICE; also covers the older trailing-slash degeneration).
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
-
-    sf_base = cache_sf_token(sf_dir)
-    key = f"{sf_base}_{st.st_size}_{st.st_mtime_ns}"
+    """documents.text as a one-doc-per-line text corpus (the reference's
+    file-of-lines input model), built once per SF and shared by every
+    invocation and session through io.publish_cached.  Output dirs stay
+    per-process (io.user_scratch_dir)."""
 
     def build(staged: str) -> None:
         table(spark, sf_dir, "documents").select("text").write.mode(
             "overwrite"
         ).text(staged)
 
-    # Input-identity key alone is sound HERE (unlike the kv-sink cache,
-    # which also hashes its code version): the spill is a pure
-    # projection of documents.parquet, no derivation code to go stale.
-    return publish_cached(
-        f"mfs_mr_corpus_{key}",
-        build,
-        family=f"mfs_mr_corpus_{sf_base}",
-    )
+    return publish_cached("mr_corpus", sf_dir, "documents", build)
 
 
 @register("mapreduce_job_wordcount", oracle=_ORACLE, tags=("compat", "udf"), bench=True)

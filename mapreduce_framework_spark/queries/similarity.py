@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_framework_spark.io import table
+from mapreduce_framework_spark.io import publish_cached, table
 from mapreduce_framework_spark.operators.annsearch import brute_force_topk, ivf_topk
 from mapreduce_framework_spark.registry import register
 
@@ -976,43 +976,6 @@ def sim_search_doc_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _per_sf_cached_index(
-    spark: SparkSession, sf_dir: str, kind: str, params: str, build
-):
-    """Per-SF build-once cache for a persisted ANN index (round-8
-    verdict task #4 — the probe-only steady-state lane): keyed by
-    (sf, embeddings file identity, index kind) — a pure function of
-    immutable inputs, exactly _spill_corpus's contract
-    (queries/mapreduce_job.py) — staged privately and atomically
-    renamed into place, so concurrent sessions race safely and readers
-    only ever see a complete index.  The *_persisted keys keep pricing
-    build+probe per invocation; the *_probe keys below read this cache,
-    so bench's min-of-3 records pure serving latency on a prebuilt
-    index — the number that matters at 100 TB, where the build
-    amortizes across every query."""
-    import os
-
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    # ``params`` folds every index-build parameter into the key (the
-    # adjacency cache's k/n_buckets convention): without it, changing
-    # n_sub/n_seeds/centroids would silently serve a stale index built
-    # with the OLD parameters — round-9 review finding.
-    sf_base = cache_sf_token(sf_dir)
-    ident = f"{sf_base}_{params}_{st.st_size}_{st.st_mtime_ns}"
-    # family = kind + SF + params (the coexistence axes — round-10
-    # ADVICE: two concurrently-used parameterizations of one SF must
-    # not reap each other); only superseded FILE-IDENTITY generations
-    # are reaped by the publish sweep after the cross-session age
-    # guard (io.reap_superseded).
-    return publish_cached(
-        f"mfs_idx_cache_{kind}_{ident}",
-        build,
-        family=f"mfs_idx_cache_{kind}_{sf_base}_{params}",
-    )
-
-
 @register(
     "sim_search_pq_probe",
     # Identical pipeline to sim_search_pq_persisted — the cache must be
@@ -1040,12 +1003,12 @@ def sim_search_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvecs = table(spark, sf_dir, "embeddings").select(
         "vec_id", kquantize(F.col("embedding")).alias("v")
     )
-    dest = _per_sf_cached_index(
-        spark,
+    dest = publish_cached(
+        "idx_pq",
         sf_dir,
-        "pq",
-        "ns4sd16se8",
+        "embeddings",
         lambda path: persist_pq_index(qvecs, path, n_sub=4, sub_dim=16, n_seeds=8),
+        "ns4sd16se8",
     )
     codes = spark.read.parquet(f"{dest}/codes")
     codebook = spark.read.parquet(f"{dest}/codebook")
@@ -1086,14 +1049,14 @@ def sim_search_ivf_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvecs = table(spark, sf_dir, "embeddings").select(
         "vec_id", kquantize(F.col("embedding")).alias("v")
     )
-    dest = _per_sf_cached_index(
-        spark,
+    dest = publish_cached(
+        "idx_ivfpq",
         sf_dir,
-        "ivfpq",
-        "c16ns4sd16",
+        "embeddings",
         lambda path: persist_ivf_pq_index(
             vectors.where(F.col("vec_id") != 0), qvecs, centroids, path
         ),
+        "c16ns4sd16",
     )
     codes = spark.read.parquet(f"{dest}/codes")
     codebook = spark.read.parquet(f"{dest}/codebook")

@@ -320,27 +320,10 @@ def source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kv_sink_cache(spark: SparkSession, sf_dir: str) -> str:
     """Build-once `key:value` sink of the wordcount result, R=5 shard
     files (the reference's graded small-run reducer count), published
-    through io.publish_cached.  The cache key carries BOTH the input
-    identity (documents.parquet size/mtime) and a code-version
-    component: unlike the corpus spill (a pure projection of the
-    input), this artifact is DERIVED OUTPUT — wordcount through the
-    tokenizer — so a tokenizer/wordcount change must invalidate it, or
-    the key would serve stale counts against a freshly-computed oracle
-    and stay red until someone hand-cleared /tmp.  The oracle SQL
-    string is that version: it encodes the tokenizer rules verbatim."""
-    import hashlib
-
+    through io.publish_cached."""
     from mapreduce_framework_spark.compat import write_kv_text
-    from mapreduce_framework_spark.io import cache_sf_token, publish_cached
-    from mapreduce_framework_spark.queries.wordcount import _ORACLE, wordcount
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    ver = hashlib.sha1(_ORACLE.encode()).hexdigest()[:8]
-    # cache_sf_token (path-hash-suffixed basename): an sf_dir basename
-    # that extends another with an underscore must not nest inside its
-    # GC family (round-10 ADVICE).
-    sf_base = cache_sf_token(sf_dir)
-    key = f"{sf_base}_{st.st_size}_{st.st_mtime_ns}_{ver}"
+    from mapreduce_framework_spark.io import publish_cached
+    from mapreduce_framework_spark.queries.wordcount import wordcount
 
     def build(staged: str) -> None:
         counts = wordcount(spark, sf_dir).select(
@@ -348,11 +331,7 @@ def _kv_sink_cache(spark: SparkSession, sf_dir: str) -> str:
         )
         write_kv_text(counts.repartition(5, "key"), staged)
 
-    return publish_cached(
-        f"mfs_kvsink_{key}",
-        build,
-        family=f"mfs_kvsink_{sf_base}",
-    )
+    return publish_cached("kvsink", sf_dir, "documents", build)
 
 
 def _load_kvtext_oracle() -> str:
@@ -436,36 +415,28 @@ def stream_kvtext_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     resume/mutation behavior is pinned by tests/test_kvtext_source.py;
     this key puts the lane itself under the driver's hash gate.
 
-    Resource hygiene (review finding): the checkpoint lives at a
-    pid-scoped FIXED path (io.user_scratch_dir) cleared per invocation
-    (REUSING the checkpoint would make the second availableNow pass
-    read zero new shards and return empty),
-    and the memory sink uses one fixed pid-scoped table name so
-    repeated runs REPLACE the driver-held result instead of
-    accumulating one full copy per invocation."""
+    The checkpoint lives at a pid-scoped FIXED path
+    (io.user_scratch_dir) cleared per invocation: REUSING it would make
+    the second availableNow pass read zero new shards and return empty.
+    The memory sink follows streaming.runner.run_to_memory's rule."""
     import shutil
 
     from mapreduce_framework_spark.sources.kvtext_datasource import register_kvtext
+    from mapreduce_framework_spark.streaming.runner import run_to_memory
 
     register_kvtext(spark)
     path = _kv_sink_cache(spark, sf_dir)
     ckpt = os.path.join(user_scratch_dir("kvstream"), "ckpt")
     shutil.rmtree(ckpt, ignore_errors=True)
-    sink = f"kvstream_sink_{os.getpid()}"
-    q = (
+    _, result = run_to_memory(
+        spark,
         spark.readStream.format("kvtext")
         .load(path)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
+        .writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-    q.awaitTermination()
-    return spark.table(sink).select(
-        F.col("key").alias("word"), F.col("value").alias("cnt")
-    )
+    return result.select(F.col("key").alias("word"), F.col("value").alias("cnt"))
 
 
 @register(

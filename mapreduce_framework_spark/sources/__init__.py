@@ -76,16 +76,12 @@ def overwrite_partitions_dynamic(
     """Dynamic partition overwrite: replace ONLY the partitions present
     in ``df``, leave every other partition untouched — the incremental
     pattern for daily/hourly re-runs over a 100 TB table (static
-    overwrite mode would truncate the whole dataset first).  The conf is
-    scoped to this write and restored after."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+    overwrite mode would truncate the whole dataset first).  The mode is
+    a writer option, so the session conf — seen by every job planned
+    concurrently on the session — is never touched."""
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        *partition_cols
+    ).parquet(path)
 
 
 def write_compacted(

@@ -335,35 +335,24 @@ class KvTextCommit(WriterCommitMessage):
         self.tmp_path = tmp_path
 
 
-class KvTextWriter(DataSourceWriter):
-    """``df.write.format("kvtext").save(path)`` with the two-phase
-    commit the format never had in the reference (workers wrote sink
-    files in place; a dead reducer left a truncated shard for the
-    chained job to mis-read).  Tasks stage ``.part-*.tmp`` files;
-    ``commit`` (driver, runs once, only after EVERY task succeeded)
-    renames them all to uniquely-suffixed ``part-*`` shards; under
-    OVERWRITE the new shards land under a fresh epoch tag and one
-    atomic ``_manifest`` replace flips the live generation (see
-    ``commit`` — round-10 verdict task #3); ``abort`` deletes the
-    stage.  Readers therefore only ever see complete shards of one
-    complete generation.  Rename-as-commit assumes the sink dir is on
-    a rename-atomic FS (local disk/HDFS; on S3-like stores use a
-    manifest commit instead — the sink_snapshot_time_travel pattern).
-    """
+class _KvTextStage:
+    """Task-side staging shared by the batch and stream writers: tasks
+    write ``.part-<run>-<uuid>.tmp`` files, and only the driver-side
+    ``commit`` (which differs per writer) renames them into shards.
 
-    def __init__(self, options: dict, overwrite: bool) -> None:
+    The run id is minted per writer instance on the DRIVER and shipped
+    inside the pickled writer to every task: staged names carry it, so
+    commit/abort sweeps can tell THIS job's stragglers from a
+    concurrent append's live stage (a global .tmp sweep would break
+    the concurrent appends the unique shard names are designed to
+    allow)."""
+
+    def __init__(self, options: dict, usage: str) -> None:
         import uuid
 
         self._root = options.get("path")
         if not self._root:
-            raise ValueError("kvtext: .save(path) is required")
-        self._overwrite = overwrite
-        # Writer-instance run id, minted on the DRIVER and shipped
-        # inside the pickled writer to every task: staged names carry
-        # it, so commit/abort sweeps can distinguish THIS job's
-        # stragglers from a concurrent append's live stage (round-10
-        # review finding — a global .tmp sweep broke the concurrent
-        # appends the unique shard names were designed to allow).
+            raise ValueError(f"kvtext: {usage} is required")
         self._run = uuid.uuid4().hex[:8]
 
     def write(self, iterator) -> KvTextCommit:
@@ -388,6 +377,56 @@ class KvTextWriter(DataSourceWriter):
                     )
                 f.write(f"{key}:{value}\n")
         return KvTextCommit(tmp)
+
+    def _sweep_stage(self, messages=()) -> None:
+        """Delete the staged files of ``messages`` (abort), then every
+        other ``.tmp`` of THIS run: failed-then-retried or lost
+        speculative task attempts, and tasks that died mid-write, never
+        return a commit message — so even a job that ultimately
+        SUCCEEDED would otherwise leave orphan debris in the live sink
+        dir.  A concurrent writer's stage (different
+        run id) is untouched; dead FOREIGN runs' stragglers go through
+        the age-guarded :func:`sweep_stale_stage`."""
+        import os
+
+        for msg in messages:
+            if msg is not None:
+                try:
+                    os.remove(msg.tmp_path)
+                except OSError:
+                    pass
+        prefix = f".part-{self._run}-"
+        try:
+            for name in os.listdir(self._root):
+                if name.startswith(prefix) and name.endswith(".tmp"):
+                    try:
+                        os.remove(os.path.join(self._root, name))
+                    except OSError:
+                        pass
+        except FileNotFoundError:
+            pass
+        sweep_stale_stage(self._root, self._run)
+
+
+class KvTextWriter(_KvTextStage, DataSourceWriter):
+    """``df.write.format("kvtext").save(path)`` with the two-phase
+    commit the format never had in the reference (workers wrote sink
+    files in place; a dead reducer left a truncated shard for the
+    chained job to mis-read).  Tasks stage ``.part-*.tmp`` files;
+    ``commit`` (driver, runs once, only after EVERY task succeeded)
+    renames them all to uniquely-suffixed ``part-*`` shards; under
+    OVERWRITE the new shards land under a fresh epoch tag and one
+    atomic ``_manifest`` replace flips the live generation (see
+    ``commit``); ``abort`` deletes the
+    stage.  Readers therefore only ever see complete shards of one
+    complete generation.  Rename-as-commit assumes the sink dir is on
+    a rename-atomic FS (local disk/HDFS; on S3-like stores use a
+    manifest commit instead — the sink_snapshot_time_travel pattern).
+    """
+
+    def __init__(self, options: dict, overwrite: bool) -> None:
+        super().__init__(options, ".save(path)")
+        self._overwrite = overwrite
 
     def commit(self, messages) -> None:
         """Publish the staged set.  Atomicity contract (round-10
@@ -479,53 +518,15 @@ class KvTextWriter(DataSourceWriter):
                     self._root, f"part-{tag}{i:05d}-{self._run}"
                 )
                 os.rename(msg.tmp_path, final)
-        # Failed-then-retried (or lost speculative) task attempts staged
-        # .tmp files that never made it into ``messages`` — only abort()
-        # used to sweep those, so a job that ultimately SUCCEEDED after
-        # task retries left orphan debris in the live sink dir forever
-        # (round-9 ADVICE).  Sweep is scoped to THIS writer's run id:
-        # the committed set was renamed away above, so every remaining
-        # `.part-{run}-*` is one of our stragglers, and a concurrent
-        # append's in-flight stage (different run id) is untouched.
-        # Foreign DEAD runs' stragglers are reclaimed by the
-        # age-guarded sweep (round-10 ADVICE #4).
-        self._sweep_own_stage()
-        sweep_stale_stage(self._root, self._run)
-
-    def _sweep_own_stage(self) -> None:
-        import os
-
-        prefix = f".part-{self._run}-"
-        try:
-            for name in os.listdir(self._root):
-                if name.startswith(prefix) and name.endswith(".tmp"):
-                    try:
-                        os.remove(os.path.join(self._root, name))
-                    except OSError:
-                        pass
-        except FileNotFoundError:
-            pass
+        # The committed set was renamed away above, so every remaining
+        # `.part-{run}-*` is one of our stragglers.
+        self._sweep_stage()
 
     def abort(self, messages) -> None:
-        import os
-
-        for msg in messages:
-            if msg is not None:
-                try:
-                    os.remove(msg.tmp_path)
-                except OSError:
-                    pass
-        # Tasks that died MID-write never returned a commit message, so
-        # their staged files are invisible to the loop above — sweep
-        # the rest of OUR stage (run-id-scoped: a concurrent writer's
-        # stage survives) so failed jobs don't accrete hidden debris.
-        # Dead FOREIGN runs' stragglers go through the age-guarded
-        # sweep (round-10 ADVICE #4).
-        self._sweep_own_stage()
-        sweep_stale_stage(self._root, self._run)
+        self._sweep_stage(messages)
 
 
-class KvTextStreamWriter(DataSourceStreamWriter):
+class KvTextStreamWriter(_KvTextStage, DataSourceStreamWriter):
     """``df.writeStream.format("kvtext")`` — the streaming half of the
     sink, completing the format matrix (batch read/write + stream
     read/write): the reference's reducer sink as an EXACTLY-ONCE
@@ -557,32 +558,8 @@ class KvTextStreamWriter(DataSourceStreamWriter):
     never swept."""
 
     def __init__(self, options: dict, overwrite: bool = False) -> None:
-        import uuid
-
-        self._root = options.get("path")
-        if not self._root:
-            raise ValueError("kvtext: .option/.start(path) is required")
+        super().__init__(options, ".option/.start(path)")
         self._truncate = overwrite
-        self._run = uuid.uuid4().hex[:8]
-
-    def write(self, iterator) -> KvTextCommit:
-        import os
-        import uuid
-
-        os.makedirs(self._root, exist_ok=True)
-        tmp = os.path.join(
-            self._root, f".part-{self._run}-{uuid.uuid4().hex}.tmp"
-        )
-        with open(tmp, "w", encoding="utf-8") as f:
-            for row in iterator:
-                key, value = row[0], row[1]
-                if key is None or value is None:
-                    raise ValueError(
-                        "kvtext: null key/value is not representable "
-                        f"in the line format (got key={key!r} value={value!r})"
-                    )
-                f.write(f"{key}:{value}\n")
-        return KvTextCommit(tmp)
 
     def commit(self, messages, batchId: int) -> None:
         import os
@@ -614,34 +591,10 @@ class KvTextStreamWriter(DataSourceStreamWriter):
         for i, msg in enumerate(m for m in messages if m is not None):
             final = os.path.join(self._root, f"{prefix}{i:05d}")
             os.rename(msg.tmp_path, final)
-        self._sweep_own_stage()
-        sweep_stale_stage(self._root, self._run)
-
-    def _sweep_own_stage(self) -> None:
-        import os
-
-        prefix = f".part-{self._run}-"
-        try:
-            for name in os.listdir(self._root):
-                if name.startswith(prefix) and name.endswith(".tmp"):
-                    try:
-                        os.remove(os.path.join(self._root, name))
-                    except OSError:
-                        pass
-        except FileNotFoundError:
-            pass
+        self._sweep_stage()
 
     def abort(self, messages, batchId: int) -> None:
-        import os
-
-        for msg in messages:
-            if msg is not None:
-                try:
-                    os.remove(msg.tmp_path)
-                except OSError:
-                    pass
-        self._sweep_own_stage()
-        sweep_stale_stage(self._root, self._run)
+        self._sweep_stage(messages)
 
 
 class KvTextStreamReader(DataSourceStreamReader):

@@ -101,6 +101,24 @@ def stage_replay(
     return part_files
 
 
+def run_to_memory(spark: SparkSession, writer) -> tuple:
+    """Run ``writer`` (a configured ``DataStreamWriter``) to completion
+    into a memory sink; return the finished query and its result frame.
+
+    The ONE memory-sink rule: every run gets a unique query name, and
+    the sink's temp view is dropped before this returns or raises.  The
+    returned frame keeps the rows alive only while the caller holds it,
+    so the driver does not keep one result per stream the session ever
+    ran, and concurrent streams never share a name."""
+    name = f"mfs_sink_{uuid.uuid4().hex[:12]}"
+    try:
+        query = writer.format("memory").queryName(name).start()
+        query.awaitTermination()
+        return query, spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
 def run_file_stream(
     spark: SparkSession,
     source_df: DataFrame,
@@ -205,7 +223,6 @@ def run_file_stream(
             stream = stream.withWatermark(*watermark)
 
         out = transform(stream)
-        sink_name = f"mfs_sink_{uuid.uuid4().hex[:12]}"
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
         # recentProgress retains only the last numRecentProgressUpdates
@@ -227,15 +244,12 @@ def run_file_stream(
                 str(max(100, min_batches + 16)),
             )
         try:
-            query = (
-                out.writeStream.format("memory")
-                .queryName(sink_name)
-                .outputMode(output_mode)
+            query, result = run_to_memory(
+                spark,
+                out.writeStream.outputMode(output_mode)
                 .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
+                .trigger(availableNow=True),
             )
-            query.awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
             if prev_recent is not None:
@@ -251,4 +265,4 @@ def run_file_stream(
             collect_progress.extend(query.recentProgress)
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.table(sink_name)
+    return result

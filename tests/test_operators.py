@@ -402,25 +402,6 @@ def test_probe_bucket_index_rejects_empty_signature(spark):
         probe_bucket_index(idx, [])
 
 
-def test_lsh_hint_verification_catches_stale_count(spark, monkeypatch):
-    """The n_vectors hint must be exact — under MFS_VERIFY_LSH_HINT=1 a
-    hint whose derived plane count diverges from the true corpus count's
-    raises instead of silently changing bucketing (and top-k)."""
-    import pytest
-
-    from mapreduce_framework_spark.operators.annsearch import lsh_topk
-    from mapreduce_framework_spark.queries.similarity import _vectors
-
-    vectors = _vectors(spark, SF_DIR).select("vec_id", "v")
-    n = vectors.count()
-    monkeypatch.setenv("MFS_VERIFY_LSH_HINT", "1")
-    # Exact hint passes.
-    assert len(lsh_topk(vectors, query_id=0, k=5, n_vectors=n).collect()) == 5
-    # A hint orders of magnitude off derives a different plane count.
-    with pytest.raises(ValueError, match="stale hint"):
-        lsh_topk(vectors, query_id=0, k=5, n_vectors=max(64, n * 1000))
-
-
 def test_chunk_dedup_conservation(spark):
     """dedup_chunk_exact invariants: every chunk is owned by exactly
     one doc (sum of n_kept == number of DISTINCT chunks in the corpus),

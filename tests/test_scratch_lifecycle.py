@@ -1,6 +1,7 @@
 """Scratch-directory lifecycle: every per-call query artifact lives in
 io.user_scratch_dir, so repeated calls keep the temp dir bounded and a
-memory-sink stream replay leaves nothing behind at all."""
+memory-sink stream replay leaves nothing behind at all — on disk or in
+the session catalog."""
 
 from __future__ import annotations
 
@@ -91,3 +92,18 @@ def test_package_has_one_temp_dir_policy():
         if pat.search(line)
     ]
     assert offenders == [], offenders
+
+
+def test_memory_sinks_do_not_accumulate_in_catalog(spark):
+    """Both memory-sink streams drop their sink's temp view before
+    returning: repeated calls leave the session catalog as it was, and
+    the frame an earlier call returned still collects."""
+    from mapreduce_framework_spark.registry import get_query
+
+    n_tables = len(spark.catalog.listTables())
+    for key in ("stream_tumbling_count", "stream_kvtext_source"):
+        fn = get_query(key).fn
+        frames = [fn(spark, SF_DIR) for _ in range(3)]
+        assert len(spark.catalog.listTables()) == n_tables, key
+        first = sorted(frames[0].collect())
+        assert first and first == sorted(frames[-1].collect()), key

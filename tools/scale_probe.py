@@ -247,7 +247,7 @@ def build_tiers(spark, small: int, big: int) -> dict[str, dict[int, callable]]:
     operator on a (cached) synthetic input of that size and returns a
     result row count."""
     from mapreduce_framework_spark.functions.tokenize import word_ngrams
-    from mapreduce_framework_spark.operators.annsearch import lsh_topk
+    from mapreduce_framework_spark.operators.annsearch import lsh_topk, occupancy_planes
     from mapreduce_framework_spark.operators.minhash import candidate_pairs
     from mapreduce_framework_spark.operators.simhash import fingerprints, near_pairs
     from mapreduce_framework_spark.queries.dedup import (
@@ -528,10 +528,14 @@ def build_tiers(spark, small: int, big: int) -> dict[str, dict[int, callable]]:
         return forced_count(ngram_novelty_frame(d), [r"HashAggregate"])
 
     def t_lsh(n):
-        # n is known here — pass the hint so the probe measures the
-        # operator, not an extra count() job over the synthetic corpus.
+        # n is known here — derive the plane count from it so the probe
+        # measures the operator, not an extra count() job over the
+        # synthetic corpus.
         return forced_count(
-            lsh_topk(corpus("vectors", n), query_id=0, k=10, n_vectors=n), [r"Join"]
+            lsh_topk(
+                corpus("vectors", n), query_id=0, k=10, n_planes=occupancy_planes(n)
+            ),
+            [r"Join"],
         )
 
     def t_semantic_skew(n):
